@@ -5,6 +5,7 @@ the self-tests run without Spark."""
 
 from __future__ import annotations
 
+import gc
 import os
 import random
 import resource
@@ -18,6 +19,9 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 CPUS = 4
 DRIVER_MEM = "2g"
+# whole cycles before measuring: the first pass of a kind runs 20-40%
+# slower than the second, later passes only a little faster
+WARM_PASSES = 2
 
 
 class CheckError(AssertionError):
@@ -100,20 +104,27 @@ class HostProbe:
 
 # ----------------------------------------------------------------- memory
 
-def _vm_hwm_kb(pid: int) -> int:
-    with open(f"/proc/{pid}/status") as f:
-        for line in f:
-            if line.startswith("VmHWM:"):
-                return int(line.split()[1])
-    return 0
-
-
-def peak_rss_mb(spark) -> float:
-    """Peak resident memory of the driver: this Python process plus the
-    JVM it launched (Linux ``ru_maxrss`` and ``VmHWM`` are in KiB)."""
+def mem_mb(spark) -> float:
+    """Driver memory: this Python process's peak resident size (Linux
+    ``ru_maxrss``, KiB) plus the JVM's live heap. The live heap follows
+    what the program keeps (caches, broadcasts, checkpointed blocks); the
+    JVM's resident size and peak used heap follow GC sizing instead. Read
+    after the warm-up, a fixed amount of work, not after the timed loop,
+    whose op count follows the host's speed."""
+    gc.collect()  # drops Python proxies, so the JVM can free their objects
     py_kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
-    jvm_pid = int(spark._jvm.java.lang.ProcessHandle.current().pid())
-    return (py_kb + _vm_hwm_kb(jvm_pid)) / 1024.0
+    jvm = spark._jvm
+    # Spark's cleaner frees blocks of collected objects on its own thread:
+    # the live heap settled within 1 MB after three or four collections
+    # half a second apart, while the first one read up to 60% higher
+    for _ in range(4):
+        jvm.java.lang.System.gc()
+        time.sleep(0.5)
+    heap = jvm.java.lang.management.ManagementFactory.getMemoryMXBean() \
+        .getHeapMemoryUsage().getUsed()
+    log(f"memory: Python peak {py_kb / 1024.0:.1f} MB, "
+        f"JVM live heap {heap / 2**20:.1f} MB")
+    return py_kb / 1024.0 + heap / 2**20
 
 
 # ------------------------------------------------------------ environment
@@ -127,8 +138,9 @@ def make_workdir(workload: str) -> str:
 
 
 def start_spark(workdir: str):
-    """``local[4]`` with the heap pinned and every temp path inside the
-    work directory, so a run writes only inside its checkout."""
+    """``local[4]`` with the heap capped (``-Xmx`` through
+    ``SPARK_GRAFT_DRIVER_MEM``) and every temp path inside the work
+    directory, so a run writes only inside its checkout."""
     tmp = os.path.join(workdir, "tmp")
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = tmp
@@ -147,11 +159,7 @@ def start_spark(workdir: str):
         extra_conf={
             "spark.local.dir": tmp,
             "spark.sql.warehouse.dir": os.path.join(workdir, "warehouse"),
-            # a heap committed and touched up front: the JVM's resident
-            # size then no longer follows GC sizing decisions, which moved
-            # peak RSS by up to 30% between runs of the same code
             "spark.driver.extraJavaOptions":
-                f"-Xms{DRIVER_MEM} -XX:+AlwaysPreTouch "
                 f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
         })
     spark.sparkContext.setLogLevel("ERROR")
@@ -242,27 +250,15 @@ class Runner:
                 samples.setdefault(op.kind, []).append(dt)
         return True
 
-    def warm_up(self, min_passes: int = 2, max_passes: int = 4,
-                max_s: float = 20.0, settle: float = 0.10) -> int:
-        """Run whole cycles until no kind's median got faster by more than
-        ``settle`` since the previous cycle: at least ``min_passes``, at
-        most ``max_passes``, and no new pass after ``max_s`` seconds
-        once ``min_passes`` are done."""
-        t_end = time.perf_counter() + max_s
-        prev: "dict | None" = None
-        for n in range(1, max_passes + 1):
+    def warm_up(self) -> None:
+        """Run ``WARM_PASSES`` whole cycles. A fixed count keeps set-up
+        time comparable between runs."""
+        for n in range(1, WARM_PASSES + 1):
             cur: dict = {}
             self._pass(cur)
             self.probe.sample()
             log(f"warm-up pass {n}: " + " ".join(
                 f"{k}={median(v):.0f}" for k, v in sorted(cur.items())))
-            if n >= min_passes and (
-                    time.perf_counter() > t_end or all(
-                        median(cur[k]) >= (1 - settle) * median(prev[k])
-                        for k in cur if k in prev)):
-                return n
-            prev = cur
-        return max_passes
 
     def run_once(self) -> dict:
         samples: dict = {}

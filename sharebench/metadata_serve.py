@@ -174,11 +174,19 @@ def build_ops(fx: Fixture, seed: int) -> dict:
                                           page_token=token)
         check(file_ids(lines) == expect_second, "second page")
 
-    def small_pred_literal():
+    # what sets an op's cost (range width, page size, span length,
+    # version) takes the same values for every seed, and the seed picks
+    # where they fall: seeds change which files an op touches, not how
+    # much work a cycle holds, so runs with different seeds compare
+    def sizes(lo, hi):
+        return [lo + (hi - lo) * i // (SMALL_REPS - 1)
+                for i in range(SMALL_REPS)]
+
+    def small_pred_literal(width):
         mode = rng.choice(fixtures.MODES)
         ids = [r["id"] for p in active[latest] for r in sfiles[p]["rows"]]
-        lo = rng.randrange(min(ids), max(ids))
-        hi = lo + rng.randrange(100, 1500)
+        lo = rng.randrange(min(ids), max(ids) - width)
+        hi = lo + width
         keep = {p for p in active[latest]
                 if sfiles[p]["partitionValues"]["mode"] == mode
                 and sfiles[p]["stats"]["maxValues"]["id"] >= lo
@@ -202,14 +210,13 @@ def build_ops(fx: Fixture, seed: int) -> dict:
         m = rng.randrange(90, 110)
         return m, large_sorted[:m], large_sorted[m:2 * m]
 
-    def span():
-        a = rng.randrange(1, latest)
-        return a, rng.randrange(a + 1, latest + 1)
+    def span(length):
+        a = rng.randrange(1, latest - length + 1)
+        return a, a + length
 
     tt = []
-    for _ in range(SMALL_REPS):
-        v = rng.randrange(0, latest)
-        if rng.random() < 0.5:
+    for i, v in enumerate(sizes(0, latest - 1)):
+        if i % 2 == 0:
             tt.append((v, None, active[v]))
         else:
             ts = fixtures.TS0 + v * fixtures.TS_STEP + fixtures.TS_STEP // 2
@@ -222,11 +229,11 @@ def build_ops(fx: Fixture, seed: int) -> dict:
         "metadata": [("lineitem_small", ["mode"], len(active[latest]))]
         * SMALL_REPS,
         "query": [(None, None, active[latest])] * SMALL_REPS,
-        "query_pred": [("lineitem_small", *small_pred_literal())
-                       for _ in range(SMALL_REPS)],
-        "query_paged": [(rng.randrange(20, 41),) for _ in range(SMALL_REPS)],
-        "changes": [span() for _ in range(SMALL_REPS)],
-        "range": [span() for _ in range(SMALL_REPS)],
+        "query_pred": [("lineitem_small", *small_pred_literal(w))
+                       for w in sizes(100, 1500)],
+        "query_paged": [(m,) for m in sizes(20, 40)],
+        "changes": [span(n) for n in sizes(1, latest - 1)],
+        "range": [span(n) for n in sizes(1, latest - 1)],
         "time_travel": tt,
     }
     fns = {"version": version, "metadata": metadata, "query": query,
@@ -247,7 +254,8 @@ def build_ops(fx: Fixture, seed: int) -> dict:
 
 def run(spark, workdir: str, seed: int, seconds: float, probe, tracer):
     from common import (Runner, log, mean_of_kind_medians,
-                        mean_of_kind_percentiles, median, seeded_cycle)
+                        mean_of_kind_percentiles, median, mem_mb,
+                        seeded_cycle)
 
     setups, fx = [], None
     for r in range(SETUP_REPS):
@@ -266,10 +274,11 @@ def run(spark, workdir: str, seed: int, seconds: float, probe, tracer):
         runner = Runner(cycle, probe, tracer)
         warm = Runner(seeded_cycle(ops, {}, seed), probe, tracer)
         t0 = time.perf_counter()
-        passes = warm.warm_up(min_passes=2, max_passes=3, max_s=20.0)
+        warm.warm_up()
         warm_s = time.perf_counter() - t0
+        mem = mem_mb(spark)
         log(f"setup reps {[round(x, 2) for x in setups]} warm-up "
-            f"{passes} passes {warm_s:.1f}s")
+            f"{warm_s:.1f}s")
         if tracer is not None:
             tracer.start()
         samples = runner.measure(seconds)
@@ -285,6 +294,7 @@ def run(spark, workdir: str, seed: int, seconds: float, probe, tracer):
     heavy = {k: v for k, v in samples.items() if k.startswith("large_")}
     return {
         "setup_s": median(setups) + warm_s,
+        "mem_mb": mem,
         "light_ms": mean_of_kind_medians(light),
         "light_p90_ms": mean_of_kind_percentiles(light, 90),
         "heavy_ms": mean_of_kind_medians(heavy),

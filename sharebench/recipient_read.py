@@ -27,9 +27,6 @@ from common import Op, check
 SHARE, SCHEMA = "bench", "recipient"
 SETUP_REPS = 3
 DIM, PQ_M, PQ_K = 16, 4, 8
-# prep ops per kind per cycle (scan kinds run once): the prep kinds are
-# the noisier ones, so they get the samples
-PREP_REPS = 2
 
 
 def expected_checksum(rows) -> tuple:
@@ -87,6 +84,8 @@ class Prep:
     direct parquet read of the corpus files: the expected answers."""
 
     def __init__(self, spark, fx: Fixture):
+        from delta_sharing_spark.operators import similarity
+
         self.spark = spark
         paths = [os.path.join(fx.corpus.root, p) for p in fx.corpus.files]
         self.direct = spark.read.parquet(*paths)
@@ -94,14 +93,10 @@ class Prep:
         self.queries = spark.createDataFrame(
             [(r["vec_id"], r["embedding"]) for r in rows],
             "vec_id long, embedding array<double>").localCheckpoint()
-        # codebooks seeded from the first PQ_K vectors (pq_fit's seeding
-        # with no Lloyd round): the prep kinds time search, not fitting
-        sub = DIM // PQ_M
-        self.books = spark.createDataFrame(
-            [(s, c, rows[c]["embedding"][s * sub:(s + 1) * sub], 1)
-             for s in range(PQ_M) for c in range(PQ_K)],
-            "sub int, cell int, centroid array<double>, n long"
-        ).localCheckpoint()
+        # codebooks fitted once, as an index is: the prep kind times
+        # encoding and search, not fitting (0.8 s more per op here)
+        self.books = similarity.pq_fit(
+            self.direct, m=PQ_M, k=PQ_K, iters=1, dim=DIM).localCheckpoint()
         self.expect = {k: fn(self.direct) for k, fn in self.kinds().items()}
 
     def kinds(self) -> dict:
@@ -172,6 +167,20 @@ def build_ops(spark, fx: Fixture, prep: Prep, seed: int, tracer=None) -> dict:
     def full_scan():
         check(checksum(deltashare()) == want_latest, "deltashare scan")
 
+    def matching(mode, lo, hi):
+        from pyspark.sql import functions as F
+
+        return (F.col("mode") == mode) & F.col("id").between(lo, hi)
+
+    def filtered(mode, lo, hi, want):
+        df = client.load_as_spark(url, spark=spark)
+        check(checksum(df.filter(matching(mode, lo, hi))) == want,
+              "filtered load_as_spark")
+
+    def pushdown_scan(mode, lo, hi, want):
+        check(checksum(deltashare().filter(matching(mode, lo, hi))) == want,
+              "filtered deltashare scan")
+
     def load_latest():
         df = client.load_as_spark(url, spark=spark)
         check(checksum(df) == want_latest, "load_as_spark")
@@ -217,10 +226,25 @@ def build_ops(spark, fx: Fixture, prep: Prep, seed: int, tracer=None) -> dict:
                 want[r["_change_type"]] = (n + 1, s + r["id"])
         return want
 
-    v_tt = rng.randrange(0, orders.version)
+    def filter_literal():
+        ids = [r["id"] for r in latest_rows]
+        width = (max(ids) - min(ids)) // 4
+        last_lo = max(ids) - width
+        first = rng.choice([r for r in latest_rows if r["id"] <= last_lo])
+        lo = first["id"]
+        hi = lo + width
+        return first["mode"], lo, hi, expected_checksum(
+            [r for r in latest_rows
+             if r["mode"] == first["mode"] and lo <= r["id"] <= hi])
+
+    # the version read and the row limit set the cost of their kinds, so
+    # they do not vary with the seed (see metadata_serve.build_ops)
+    v_tt = orders.version - 2
+    filter_args = filter_literal()
     light = {
         "load_as_spark": (load_latest, [()]),
-        "pandas_limit": (pandas_limit, [(rng.randrange(100, 1000),)]),
+        "filtered": (filtered, [filter_args]),
+        "pandas_limit": (pandas_limit, [(500,)]),
         "time_travel": (time_travel, [(v_tt, expected_checksum(
             orders.rows(v_tt)))]),
         "changes": (changes, [(1, orders.version,
@@ -229,8 +253,11 @@ def build_ops(spark, fx: Fixture, prep: Prep, seed: int, tracer=None) -> dict:
     ops = {k: [Op(k, "light", fn, a) for a in args]
            for k, (fn, args) in light.items()}
     # the Python Data Source read costs 1.3 s warm and 7-9 s cold here:
-    # it runs in traced runs only (see traced_extras)
-    ops["deltashare_scan"] = [Op("deltashare_scan", "extra", full_scan)]
+    # it runs in traced runs only (see traced_extras), in full and with
+    # the filter pushed into the server's file pruning
+    ops["deltashare_scan"] = [Op("deltashare_scan", "extra", full_scan),
+                              Op("pushdown_scan", "extra", pushdown_scan,
+                                 filter_args)]
     corpus_url = fx.url("corpus")
 
     def prep_op(kind):
@@ -243,13 +270,14 @@ def build_ops(spark, fx: Fixture, prep: Prep, seed: int, tracer=None) -> dict:
         return go
 
     for k in prep.kinds():
-        ops[k] = [Op(k, "heavy", prep_op(k))] * PREP_REPS
+        ops[k] = [Op(k, "heavy", prep_op(k))]
     return ops
 
 
 def run(spark, workdir: str, seed: int, seconds: float, probe, tracer):
     from common import (Runner, log, mean_of_kind_medians,
-                        mean_of_kind_percentiles, median, seeded_cycle)
+                        mean_of_kind_percentiles, median, mem_mb,
+                        seeded_cycle)
     from delta_sharing_spark.sources.datasource import SharedTableDataSource
 
     spark.dataSource.register(SharedTableDataSource)
@@ -269,11 +297,11 @@ def run(spark, workdir: str, seed: int, seconds: float, probe, tracer):
         runner = Runner(seeded_cycle(
             ops, {k: len(v) for k, v in ops.items()}, seed), probe, tracer)
         warm = Runner(seeded_cycle(ops, {}, seed), probe, tracer)
-        passes = warm.warm_up(min_passes=2, max_passes=3, max_s=20.0)
+        warm.warm_up()
         warm_s = time.perf_counter() - t0
+        mem = mem_mb(spark)
         log(f"setup reps {[round(x, 2) for x in setups]} reference "
-            f"{t1 - t0:.1f}s warm-up {passes} passes "
-            f"{time.perf_counter() - t1:.1f}s")
+            f"{t1 - t0:.1f}s warm-up {time.perf_counter() - t1:.1f}s")
         if tracer is not None:
             tracer.start()
         samples = runner.measure(seconds)
@@ -291,6 +319,7 @@ def run(spark, workdir: str, seed: int, seconds: float, probe, tracer):
     heavy = {k: v for k, v in samples.items() if ops[k][0].cls == "heavy"}
     return {
         "setup_s": median(setups) + warm_s,
+        "mem_mb": mem,
         "light_ms": mean_of_kind_medians(light),
         "light_p90_ms": mean_of_kind_percentiles(light, 90),
         "heavy_ms": mean_of_kind_medians(heavy),

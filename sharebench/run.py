@@ -1,7 +1,7 @@
 """Sharing-plane benchmark entry point.
 
     python3 sharebench/run.py --workload metadata_serve --seed 1 \\
-        --seconds 20 --trace 0
+        --seconds 15 --trace 0
 
 Runs one workload against the ``delta_sharing_spark`` package of the
 checkout this file sits in, checks every answer, and prints one JSON
@@ -28,7 +28,7 @@ sys.path.insert(0, os.path.dirname(HERE))
 import common  # noqa: E402
 
 WORKLOADS = ("metadata_serve", "recipient_read")
-UNITS = {"setup_s": "s", "peak_rss_mb": "MB", "light_ms": "ms",
+UNITS = {"setup_s": "s", "mem_mb": "MB", "light_ms": "ms",
          "light_p90_ms": "ms", "heavy_ms": "ms"}
 
 
@@ -58,7 +58,6 @@ def main(argv=None) -> int:
 
             tracer = tracing.Tracer(spark)
         res = workload.run(spark, wd, args.seed, args.seconds, probe, tracer)
-        rss = common.peak_rss_mb(spark)
         layers = tracer.report() if tracer is not None else None
     finally:
         if tracer is not None:
@@ -73,8 +72,7 @@ def main(argv=None) -> int:
             print(f"# error: {e}", file=sys.stderr)
     host = probe.summary()
     e2e = {k: res[k] for k in ("setup_s", "light_ms", "light_p90_ms",
-                               "heavy_ms")}
-    e2e["peak_rss_mb"] = rss
+                               "heavy_ms", "mem_mb")}
     fail_ratio = failed / attempted
     print(f"# {args.workload} " + " ".join(
         f"{res['names'].get(k, k)}={v:.4g}{UNITS[k]}"

@@ -5,8 +5,8 @@
 
 Spread is (Q3 - Q1) / median over the runs, with quartiles as
 ``statistics.quantiles(values, n=4)``: the figure each metric's bound in
-BENCHMARK.json is checked against. Runs are sequential, from the
-checkout root.
+BENCHMARK.json is checked against. Runs are untraced and sequential, from
+the checkout root.
 """
 
 from __future__ import annotations
@@ -28,14 +28,13 @@ def main() -> int:
     p.add_argument("--workload", required=True)
     p.add_argument("--seeds", type=int, nargs="+", required=True)
     p.add_argument("--seconds", type=float, required=True)
-    p.add_argument("--trace", type=int, default=0)
     args = p.parse_args()
     values: dict[str, list[float]] = {}
     for seed in args.seeds:
         proc = subprocess.run(
             [sys.executable, os.path.join(HERE, "run.py"),
              "--workload", args.workload, "--seed", str(seed),
-             "--seconds", str(args.seconds), "--trace", str(args.trace)],
+             "--seconds", str(args.seconds), "--trace", "0"],
             cwd=os.path.dirname(HERE), capture_output=True, text=True,
             timeout=600)
         lines = proc.stdout.strip().splitlines()

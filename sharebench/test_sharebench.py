@@ -99,6 +99,25 @@ class TestSeededCycle:
         assert len(orders) > 1
 
 
+class TestRunner:
+    def test_warm_up_runs_a_fixed_number_of_cycles(self):
+        calls = []
+        cycle = [common.Op(k, "light", calls.append, (k,)) for k in "ab"]
+        common.Runner(cycle, common.HostProbe()).warm_up()
+        assert calls == ["a", "b"] * common.WARM_PASSES
+
+    def test_failed_and_wrong_ops_count(self):
+        def wrong():
+            common.check(False, "wrong answer")
+
+        runner = common.Runner([common.Op("w", "light", wrong),
+                                common.Op("ok", "light", lambda: None)],
+                               common.HostProbe())
+        samples = runner.run_once()
+        assert (runner.attempted, runner.failed) == (2, 1)
+        assert list(samples) == ["ok"]
+
+
 class TestSeededInputs:
     def test_lineitem_small_is_deterministic(self, tmp_path):
         a = fixtures.build_lineitem_small(str(tmp_path / "a"), seed=3)
@@ -150,6 +169,16 @@ class TestSeededInputs:
 
         assert literals(5, "a") == literals(5, "b")
         assert literals(6, "c") != literals(5, "a")
+
+    def test_filtered_scan_matches_rows(self, tmp_path):
+        import recipient_read
+
+        fx = _FakeRecipientFixture(str(tmp_path), 5)
+        ops = recipient_read.build_ops(None, fx, _FakePrep(), 5)
+        mode, lo, hi, want = ops["filtered"][0].args
+        rows = [r for r in fx.orders.rows()
+                if r["mode"] == mode and lo <= r["id"] <= hi]
+        assert 0 < want[0] == len(rows) < len(fx.orders.rows())
 
 
 def _plain(args):
