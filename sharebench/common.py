@@ -17,7 +17,6 @@ import traceback
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-CPUS = 4
 DRIVER_MEM = "2g"
 # whole cycles before measuring: the first pass of a kind runs 20-40%
 # slower than the second, later passes only a little faster
@@ -56,10 +55,6 @@ def mean_of_kind_medians(samples: dict) -> float:
     each kind takes. A median pooled over kinds whose latencies differ
     10-500x flips between kinds from run to run; this does not."""
     return statistics.fmean(median(v) for v in samples.values())
-
-
-def mean_of_kind_percentiles(samples: dict, q: float) -> float:
-    return statistics.fmean(percentile(v, q) for v in samples.values())
 
 
 def iqr_spread(values) -> float:
@@ -137,10 +132,10 @@ def make_workdir(workload: str) -> str:
     return wd
 
 
-def start_spark(workdir: str):
-    """``local[4]`` with the heap capped (``-Xmx`` through
-    ``SPARK_GRAFT_DRIVER_MEM``) and every temp path inside the work
-    directory, so a run writes only inside its checkout."""
+def start_spark(workdir: str, cpus: int):
+    """``local[cpus]`` with the heap fixed at ``DRIVER_MEM`` (``-Xmx``
+    through ``SPARK_GRAFT_DRIVER_MEM``, and ``-Xms``) and every temp path
+    inside the work directory, so a run writes only inside its checkout."""
     tmp = os.path.join(workdir, "tmp")
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = tmp
@@ -155,12 +150,16 @@ def start_spark(workdir: str):
     from delta_sharing_spark import get_spark
 
     spark = get_spark(
-        app_name="sharebench", cpus=CPUS,
+        app_name="sharebench", cpus=cpus,
         extra_conf={
             "spark.local.dir": tmp,
             "spark.sql.warehouse.dir": os.path.join(workdir, "warehouse"),
+            # the heap starts at its cap (committed, not touched): a
+            # heap that grows through the warm-up, and shrinks again at
+            # mem_mb's full collections, left ops 16% slower in the first
+            # measured cycle than in the run's median, 8% with this
             "spark.driver.extraJavaOptions":
-                f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
+                f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -Xms{DRIVER_MEM}",
         })
     spark.sparkContext.setLogLevel("ERROR")
     return spark

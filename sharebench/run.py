@@ -28,8 +28,7 @@ sys.path.insert(0, os.path.dirname(HERE))
 import common  # noqa: E402
 
 WORKLOADS = ("metadata_serve", "recipient_read")
-UNITS = {"setup_s": "s", "mem_mb": "MB", "light_ms": "ms",
-         "light_p90_ms": "ms", "heavy_ms": "ms"}
+UNITS = {"setup_s": "s", "mem_mb": "MB", "light_ms": "ms", "heavy_ms": "ms"}
 
 
 def parse_args(argv=None):
@@ -52,7 +51,7 @@ def main(argv=None) -> int:
     spark = None
     tracer = None
     try:
-        spark = common.start_spark(wd)
+        spark = common.start_spark(wd, workload.CPUS)
         if args.trace:
             import tracing
 
@@ -71,14 +70,13 @@ def main(argv=None) -> int:
         for e in r.errors:
             print(f"# error: {e}", file=sys.stderr)
     host = probe.summary()
-    e2e = {k: res[k] for k in ("setup_s", "light_ms", "light_p90_ms",
-                               "heavy_ms", "mem_mb")}
+    e2e = {k: res[k] for k in UNITS}
     fail_ratio = failed / attempted
     print(f"# {args.workload} " + " ".join(
         f"{res['names'].get(k, k)}={v:.4g}{UNITS[k]}"
         for k, v in e2e.items()) + f" fail_ratio={fail_ratio:.4g}")
-    print("# samples (count, median ms) " + " ".join(
-        f"{k}={len(v)},{common.median(v):.1f}"
+    print("# samples (count, median ms, p90 ms) " + " ".join(
+        f"{k}={len(v)},{common.median(v):.1f},{common.percentile(v, 90):.1f}"
         for k, v in sorted(res["samples"].items())))
     print("# host " + json.dumps(host))
     for k, v in sorted(res["samples"].items()):

@@ -49,10 +49,6 @@ class TestStats:
         samples["fast"] += [2.0, 2.0, 2.0, 2.0]
         assert common.mean_of_kind_medians(samples) == 251.0
 
-    def test_mean_of_kind_percentiles(self):
-        samples = {"a": list(range(11)), "b": [4.0]}
-        assert common.mean_of_kind_percentiles(samples, 90) == (9 + 4) / 2
-
     def test_iqr_spread_uses_statistics_quantiles(self):
         xs = [10, 11, 12, 13, 14, 15, 16, 17, 18, 19]
         q1, _m, q3 = statistics.quantiles(xs, n=4)
